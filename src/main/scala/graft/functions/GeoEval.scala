@@ -35,6 +35,17 @@ object GeoEval {
   def stXMax(wkb: Array[Byte]): Double = Wkb.read(wkb).envelope._3
   def stYMax(wkb: Array[Byte]): Double = Wkb.read(wkb).envelope._4
 
+  /** Envelope of a WKB geometry by a Wkb.envelope scan into a per-thread
+    * scratch array: no Geom tree per row.
+    */
+  private val envScratch = ThreadLocal.withInitial[Array[Double]](() => new Array[Double](4))
+
+  private def envelope(wkb: Array[Byte]): Array[Double] = {
+    val e = envScratch.get()
+    Wkb.envelope(wkb, e)
+    e
+  }
+
   def stCentroid(wkb: Array[Byte]): Array[Byte] =
     Wkb.write(Ops.centroid(Wkb.read(wkb)))
 
@@ -52,8 +63,8 @@ object GeoEval {
     */
   def envIntersects(wkb: Array[Byte], x0: Double, y0: Double,
       x1: Double, y1: Double): Boolean = {
-    val (gx0, gy0, gx1, gy1) = Wkb.read(wkb).envelope
-    !(gx0 > x1 || x0 > gx1 || gy0 > y1 || y0 > gy1)
+    val e = envelope(wkb)
+    !(e(0) > x1 || x0 > e(2) || e(1) > y1 || y0 > e(3))
   }
 
   // codecs
@@ -89,16 +100,22 @@ object GeoEval {
     Wkb.write(Proj.transformGeom(Wkb.read(wkb), from.toString, to.toString))
 
   // spatial keys
+  /** Hilbert key of the geometry's envelope centre (a point's own
+    * coordinates) over the given bounds.
+    */
   def hilbert(wkb: Array[Byte], xmin: Double, ymin: Double,
       xmax: Double, ymax: Double): Long = {
-    val g = Wkb.read(wkb)
-    val c = g match {
-      case p: Point => p
-      case _ =>
-        val (x0, y0, x1, y1) = g.envelope
-        Point((x0 + x1) / 2, (y0 + y1) / 2)
-    }
-    SpatialKey.hilbert(c.x, c.y, xmin, ymin, xmax, ymax)
+    val e = envelope(wkb)
+    SpatialKey.hilbert(SpatialKey.mid(e(0), e(2)), SpatialKey.mid(e(1), e(3)),
+      xmin, ymin, xmax, ymax)
+  }
+
+  /** RangePartitioner.getPartition over ascending, distinct split keys:
+    * the index of the first split >= key, or splits.length past the last.
+    */
+  def rangeBucket(key: Long, splits: Array[Long]): Int = {
+    val i = java.util.Arrays.binarySearch(splits, key)
+    if (i >= 0) i else -i - 1
   }
 
   def hilbertXY(x: Double, y: Double, xmin: Double, ymin: Double,

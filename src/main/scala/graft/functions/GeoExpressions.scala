@@ -1,7 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -312,6 +314,35 @@ object GeoExpressions {
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       defineCodeGen(ctx, ev, c => s"$E.hilbert($c, $xmin, $ymin, $xmax, $ymax)")
     override protected def withNewChildInternal(c: Expression): HilbertIndex =
+      copy(child = c)
+  }
+
+  /** Partition id of a sort key over split keys fixed at plan time
+    * (ascending, distinct): a binary search in generated code, null keys
+    * to partition 0 — the range partitioning of a global sort as an
+    * explicit id for `Dataset.repartitionById`, so no sampling job runs
+    * at execution and a retried task routes every row the same way.
+    */
+  case class RangeBucket(child: Expression, splits: Array[Long]) extends UnaryExpression
+      with ImplicitCastInputTypes {
+    override def inputTypes: Seq[DataType] = Seq(LongType)
+    override def dataType: DataType = IntegerType
+    override def nullable: Boolean = false
+    override def eval(input: InternalRow): Any = {
+      val k = child.eval(input)
+      if (k == null) 0 else GeoEval.rangeBucket(k.asInstanceOf[Long], splits)
+    }
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val c = child.genCode(ctx)
+      val ref = ctx.addReferenceObj("splits", splits, "long[]")
+      ev.copy(code =
+        code"""
+          ${c.code}
+          int ${ev.value} = ${c.isNull} ? 0 : $E.rangeBucket(${c.value}, $ref);
+        """, isNull = FalseLiteral)
+    }
+    override def toString: String = s"range_bucket($child, ${splits.length} splits)"
+    override protected def withNewChildInternal(c: Expression): RangeBucket =
       copy(child = c)
   }
 

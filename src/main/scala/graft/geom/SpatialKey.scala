@@ -22,6 +22,13 @@ object SpatialKey {
     if (c < 0) 0L else if (c > MaxCell) MaxCell else c
   }
 
+  /** Centre of an envelope side: the midpoint, or the ordinate itself
+    * when the side is degenerate (a point keeps its exact coordinate;
+    * `(x + x) / 2` overflows to infinity near Double.MaxValue).
+    */
+  @inline def mid(lo: Double, hi: Double): Double =
+    if (lo == hi) lo else (lo + hi) / 2
+
   /** Hilbert d-index of (x, y) on a 2^Bits grid discretized over
     * [xmin,xmax]×[ymin,ymax].
     */

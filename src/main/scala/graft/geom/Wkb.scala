@@ -1,5 +1,6 @@
 package graft.geom
 
+import java.lang.invoke.MethodHandles
 import java.nio.{ByteBuffer, ByteOrder}
 
 /** WKB reader/writer.
@@ -110,6 +111,106 @@ object Wkb {
         require(n >= 0 && n <= buf.remaining(), s"bad collection size $n")
         GeometryCollection(Array.fill(n)(readGeom(buf, depth + 1)))
       case t => throw new IllegalArgumentException(s"bad WKB geometry type $t")
+    }
+  }
+
+  // ---- envelope scan ----------------------------------------------------
+
+  private val LeF64 = MethodHandles.byteArrayViewVarHandle(
+    classOf[Array[Double]], ByteOrder.LITTLE_ENDIAN)
+  private val BeF64 = MethodHandles.byteArrayViewVarHandle(
+    classOf[Array[Double]], ByteOrder.BIG_ENDIAN)
+  private val LeI32 = MethodHandles.byteArrayViewVarHandle(
+    classOf[Array[Int]], ByteOrder.LITTLE_ENDIAN)
+  private val BeI32 = MethodHandles.byteArrayViewVarHandle(
+    classOf[Array[Int]], ByteOrder.BIG_ENDIAN)
+
+  /** `read(bytes).envelope` without building the geometry: one pass
+    * over the buffer that only compares ordinates, writing
+    * (xmin, ymin, xmax, ymax) into `out(0..3)` — all NaN when the
+    * geometry has no coordinates. Allocates nothing, so the per-row
+    * envelope kernels (Hilbert keys, the sortHilbert sketch, the
+    * envelope filter) cost a scan, not a `Geom` tree. Accepts exactly
+    * what [[read]] accepts and throws IllegalArgumentException where it
+    * throws: bad byte order or type code, negative or oversized counts,
+    * a mistyped multi-geometry member, nesting past [[MaxNesting]], a
+    * truncated buffer.
+    */
+  def envelope(bytes: Array[Byte], out: Array[Double]): Unit = {
+    out(0) = Double.PositiveInfinity; out(1) = Double.PositiveInfinity
+    out(2) = Double.NegativeInfinity; out(3) = Double.NegativeInfinity
+    try scanEnvelope(bytes, 0, 0, 0, out)
+    catch {
+      case e: IndexOutOfBoundsException =>
+        throw new IllegalArgumentException(
+          s"malformed WKB (${bytes.length} bytes): ${e.getClass.getSimpleName}", e)
+    }
+    if (out(0) > out(2)) { // Geom.envelope's emptiness test
+      out(0) = Double.NaN; out(1) = Double.NaN; out(2) = Double.NaN; out(3) = Double.NaN
+    }
+  }
+
+  /** Scans the geometry at `pos` (its type must be `want`, or any type
+    * when `want` is 0) into `out`; returns the position after it.
+    */
+  private def scanEnvelope(b: Array[Byte], pos: Int, depth: Int, want: Int,
+      out: Array[Double]): Int = {
+    require(depth <= MaxNesting, s"WKB nesting deeper than $MaxNesting")
+    val le = b(pos) match {
+      case 0 => false
+      case 1 => true
+      case o => throw new IllegalArgumentException(s"bad WKB byte order $o")
+    }
+    def i32(p: Int): Int =
+      if (le) (LeI32.get(b, p): Int) else (BeI32.get(b, p): Int)
+    def f64(p: Int): Double =
+      if (le) (LeF64.get(b, p): Double) else (BeF64.get(b, p): Double)
+    // header masking exactly as readGeom
+    val rawType = i32(pos + 1)
+    val base0 = rawType & 0x0FFFFFFF
+    val isoDims = base0 / 1000
+    val geomType = base0 % 1000
+    val hasZ = (rawType & 0x80000000) != 0 || isoDims == 1 || isoDims == 3
+    val hasM = (rawType & 0x40000000) != 0 || isoDims == 2 || isoDims == 3
+    var p = pos + 5
+    if ((rawType & 0x20000000) != 0) p += 4 // SRID
+    if (geomType < 1 || geomType > 7)
+      throw new IllegalArgumentException(s"bad WKB geometry type $geomType")
+    if (want != 0 && geomType != want)
+      throw new IllegalArgumentException(
+        s"WKB member type $geomType inside a collection of type $want")
+    val stride = 8 * (2 + (if (hasZ) 1 else 0) + (if (hasM) 1 else 0))
+    def coords(from: Int, n: Int): Int = {
+      if (n.toLong * stride > b.length - from)
+        throw new IllegalArgumentException(
+          s"malformed WKB (${b.length} bytes): truncated coordinates")
+      var q = from
+      val end = from + n * stride
+      while (q < end) {
+        val x = f64(q); val y = f64(q + 8)
+        if (x < out(0)) out(0) = x; if (x > out(2)) out(2) = x
+        if (y < out(1)) out(1) = y; if (y > out(3)) out(3) = y
+        q += stride
+      }
+      end
+    }
+    def count(what: String): Int = {
+      val n = i32(p); p += 4
+      require(n >= 0 && n <= b.length - p, s"bad $what $n")
+      n
+    }
+    geomType match {
+      case 1 => coords(p, 1)
+      case 2 => val n = count("ring size"); coords(p, n)
+      case 3 =>
+        var rings = count("nRings")
+        while (rings > 0) { val n = count("ring size"); p = coords(p, n); rings -= 1 }
+        p
+      case t =>
+        var n = count(if (t == 7) "collection size" else "multi size")
+        val member = if (t == 7) 0 else t - 3
+        while (n > 0) { p = scanEnvelope(b, p, depth + 1, member, out); n -= 1 }
+        p
     }
   }
 

@@ -103,15 +103,27 @@ final case class GeoTable(
     */
   private[graft] def dataBounds: Option[(Double, Double, Double, Double)] =
     meta.primary.flatMap(_.bbox).orElse {
-      try {
-        val g = col(geomCol)
-        val r = df.agg(
-          min(geo.st_xmin(g)), min(geo.st_ymin(g)),
-          max(geo.st_xmax(g)), max(geo.st_ymax(g))).head()
-        if ((0 to 3).exists(r.isNullAt)) None
-        else Some((r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
-      } catch { case _: Exception => None }
+      try geometryExtent() catch { case _: Exception => None }
     }
+
+  /** One aggregation: min of the low and max of the high envelope sides
+    * over the rows, NULL and NaN (empty-geometry) envelopes skipped —
+    * Spark orders NaN above every double, so one empty geometry would
+    * otherwise make both maxima NaN. None when no row has an envelope.
+    */
+  private def extentOf(x0: Column, y0: Column, x1: Column,
+      y1: Column): Option[(Double, Double, Double, Double)] = {
+    def finite(c: Column): Column = nanvl(c, lit(null).cast("double"))
+    val r = df.agg(min(finite(x0)), min(finite(y0)),
+      max(finite(x1)), max(finite(y1))).head()
+    if ((0 to 3).exists(r.isNullAt)) None
+    else Some((r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
+  }
+
+  private def geometryExtent(): Option[(Double, Double, Double, Double)] = {
+    val g = col(geomCol)
+    extentOf(geo.st_xmin(g), geo.st_ymin(g), geo.st_xmax(g), geo.st_ymax(g))
+  }
 
   def filterBbox(xmin: Double, ymin: Double, xmax: Double, ymax: Double): GeoTable = {
     // warn rather than fail, like the reference (`_warn_if_crs_mismatch`,
@@ -261,39 +273,35 @@ final case class GeoTable(
 
   // ---- sorts (SURVEY §2.6) ----------------------------------------------
 
-  /** Dataset bounds: bbox-struct stats fast path via footer would apply
-    * on read; on a live plan we aggregate envelope expressions
-    * (`core/common.py:3493-3573`).
+  /** Dataset bounds (xmin, ymin, xmax, ymax): one aggregation over the
+    * covering bbox column when the table has one, else over the geometry
+    * envelopes (`core/common.py:3493-3573`), skipping NULL and empty
+    * geometries. With no non-empty geometry at all the world envelope
+    * keeps the callers (enrichSpatial, fix) total.
     */
   def bounds(): (Double, Double, Double, Double) = {
     val bboxCol = meta.primary.flatMap(_.coveringBbox)
       .filter(df.columns.contains)
-    val r = bboxCol match {
+    val extent = bboxCol match {
       case Some(b) =>
-        df.agg(min(col(s"$b.xmin")), min(col(s"$b.ymin")),
-          max(col(s"$b.xmax")), max(col(s"$b.ymax"))).head()
-      case None =>
-        val g = col(geomCol)
-        df.agg(min(geo.st_xmin(g)), min(geo.st_ymin(g)),
-          max(geo.st_xmax(g)), max(geo.st_ymax(g))).head()
+        extentOf(col(s"$b.xmin"), col(s"$b.ymin"), col(s"$b.xmax"), col(s"$b.ymax"))
+      case None => geometryExtent()
     }
-    // an empty (or all-null-geometry) table aggregates to NULLs; a
-    // degenerate world envelope keeps the callers (sortHilbert,
-    // enrichSpatial, fix) total instead of NPEing on getDouble
-    if (r.isNullAt(0)) (-180.0, -90.0, 180.0, 90.0)
-    else (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))
+    extent.getOrElse(GeoTable.WorldBounds)
   }
 
-  /** Two-phase Hilbert sort (`core/hilbert_order.py`): bounds agg, then
-    * global sort by curve index. Spark executes the global sort as
-    * range-partition + in-partition sort — exactly the
-    * repartitionByRange+sortWithinPartitions shape that scales to
-    * arbitrary cluster width.
+  /** Global Hilbert sort (`core/hilbert_order.py`). One eager job, a
+    * sketch pass over the geometry column alone, gives the dataset bounds
+    * (the geometry-envelope values of [[bounds]]) and a sample of keys;
+    * the driver turns the sample into split keys and plans a Hilbert key
+    * column, an exchange on its range bucket (`repartitionById`) and a
+    * per-partition sort on it, so partition i holds keys below those of
+    * partition i + 1 and the written part files are in curve order. The
+    * partition count follows what AQE would have coalesced the
+    * `orderBy` exchange to. See [[HilbertSort]].
     */
-  def sortHilbert(): GeoTable = {
-    val (x0, y0, x1, y1) = bounds()
-    copy(df = df.orderBy(geo.hilbert_index(col(geomCol), x0, y0, x1, y1)))
-  }
+  def sortHilbert(): GeoTable =
+    copy(df = HilbertSort.sort(df, geomCol))
 
   /** Quadkey sort: ensure key column, string sort (Z-order), optional
     * drop (`core/sort_quadkey.py:30-83,236-255`).
@@ -930,6 +938,9 @@ final case class PartitionAnalysis(nPartitions: Long, minRows: Long,
 }
 
 object GeoTable {
+
+  /** Bounds of a table with no non-empty geometry (see [[GeoTable.bounds]]). */
+  val WorldBounds: (Double, Double, Double, Double) = (-180.0, -90.0, 180.0, 90.0)
 
   /** Collect bound for the driver-assembled single-file sinks (shapefile/
     * GeoPackage/FlatGeobuf/in-memory FeatureCollection): these formats are

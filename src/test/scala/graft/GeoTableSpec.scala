@@ -466,6 +466,144 @@ class GeoTableSpec extends AnyFunSuite {
     assert(one.checkSpatialOrder().isNaN) // < 2 rows: no signal, no NPE
   }
 
+  /** Spark jobs started while `body` runs, seen by a listener. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    org.apache.spark.sql.GraftListenerBridge.waitUntilListenerBusEmpty(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.sql.GraftListenerBridge.waitUntilListenerBusEmpty(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** Runs `body` with SQL settings changed, then puts the old ones back. */
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Coalescing target small enough that a few-thousand-row table still
+    * sorts into several partitions.
+    */
+  private val smallPartitions = "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16k"
+
+  test("one empty geometry neither poisons bounds() nor disables sortHilbert") {
+    val empty = spark.range(1).toDF("id").withColumn("id", lit(2000L))
+      .withColumn("name", lit("empty"))
+      .withColumn("geometry", geo.geom_lit(graft.geom.Polygon(Array.empty)))
+    val t = GeoTable.fromDataFrame(pointsTable(2000).df.unionByName(empty), "geometry")
+    val (x0, y0, x1, y1) = t.bounds()
+    assert(Seq(x0, y0, x1, y1).forall(v => !v.isNaN && !v.isInfinite),
+      s"bounds ${(x0, y0, x1, y1)} must skip the empty envelope")
+    assert(x0 < x1 && y0 < y1)
+    // the empty row has no centre to measure order by; the 2000 points do
+    val ratio = t.sortHilbert().filterWhere("id < 2000").checkSpatialOrder()
+    assert(ratio < 0.5, s"hilbert-sorted ratio $ratio should pass the <0.5 gate")
+  }
+
+  test("sortHilbert: one sketch job, no range-sampling exchange in the written plan") {
+    import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, ShufflePartitionIdPassThrough}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    object Walk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlan]
+    val ql = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    withConf(smallPartitions) {
+      val t = pointsTable(3000)
+      val (sorted, sortJobs) = jobsDuring(t.sortHilbert())
+      assert(sortJobs == 1, s"sortHilbert() launched $sortJobs jobs, want the one sketch pass")
+      spark.listenerManager.register(ql)
+      val (_, writeJobs) = try jobsDuring(sorted.write(tmpDir("hilbert_plan")))
+        finally spark.listenerManager.unregister(ql)
+      // five before (bounds aggregation 2, RangePartitioner sampling, shuffle
+      // map, write); now the sketch, the shuffle map and the write
+      assert(sortJobs + writeJobs == 3, s"sortHilbert().write() ran ${sortJobs + writeJobs} jobs")
+      val parts = plans.toArray(Array.empty[org.apache.spark.sql.execution.SparkPlan])
+        .toSeq.flatMap(p => Walk.collect(p) { case e: ShuffleExchangeLike => e.outputPartitioning })
+      assert(parts.nonEmpty, "the written plan must have the sort's exchange")
+      assert(!parts.exists(_.isInstanceOf[RangePartitioning]), s"range exchange in $parts")
+      assert(parts.exists(_.isInstanceOf[ShufflePartitionIdPassThrough]), parts.toString)
+    }
+  }
+
+  test("sortHilbert output: keys non-decreasing across part files, ids exactly the input's") {
+    val n = 5000
+    val t = pointsTable(n)
+    val (x0, y0, x1, y1) = t.bounds()
+    val out = tmpDir("hilbert_order")
+    withConf(smallPartitions)(t.sortHilbert().write(out))
+    val files = Footer.partFiles(out)
+    assert(files.size > 1, "several part files, so the order across files is tested")
+    val rows = files.flatMap { f =>
+      spark.read.parquet(f.toString)
+        .select(col("id"), geo.hilbert_index(col("geometry"), x0, y0, x1, y1))
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+    }
+    val keys = rows.map(_._2)
+    assert(keys.zip(keys.drop(1)).forall { case (a, b) => a <= b },
+      "Hilbert keys must not decrease across the part files in order")
+    assert(rows.map(_._1).sorted == (0L until n.toLong))
+  }
+
+  test("sortHilbert: all rows at one point give one non-empty partition") {
+    // computed from the id, so the optimizer cannot fold the key to a constant
+    val df = spark.range(3000).toDF("id")
+      .withColumn("geometry", geo.st_point(col("id") * 0 + 12.5, col("id") * 0 - 3.0))
+    val sorted = withConf(smallPartitions)(
+      GeoTable.fromDataFrame(df, "geometry").sortHilbert())
+    val sizes = sorted.df.rdd.mapPartitions(it => Iterator.single(it.size)).collect()
+    assert(sizes.sum == 3000)
+    assert(sizes.count(_ > 0) == 1, s"partition sizes ${sizes.mkString(",")}")
+  }
+
+  test("sortHilbert on an all-NULL geometry column stays total") {
+    val df = pointsTable(300).df.withColumn("geometry", lit(null).cast("binary"))
+    val t = GeoTable.fromDataFrame(df, "geometry")
+    assert(t.bounds() == (-180.0, -90.0, 180.0, 90.0))
+    val out = tmpDir("hilbert_nulls")
+    withConf(smallPartitions)(t.sortHilbert().write(out))
+    assert(spark.read.parquet(out).count() == 300)
+  }
+
+  test("sortHilbert on an empty local table (no input partitions) stays total") {
+    val empty = spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), pointsTable(1).df.schema)
+    assert(GeoTable.fromDataFrame(empty, "geometry").sortHilbert().count() == 0)
+  }
+
+  test("sortHilbert writes no more part files than the coalesced orderBy did") {
+    def files(t: GeoTable, shufflePartitions: Int): Int =
+      withConf("spark.sql.shuffle.partitions" -> shufflePartitions.toString,
+          "spark.sql.adaptive.enabled" -> "true") {
+        val out = tmpDir("hilbert_files")
+        t.sortHilbert().write(out)
+        Footer.partFiles(out).size
+      }
+    // a tiny table under the CLI's defaults (32 shuffle partitions, AQE on)
+    assert(files(pointsTable(200), 32) == 1)
+    // a multi-MB table at shuffle partitions = cores
+    val cores = spark.sparkContext.defaultParallelism
+    val big = pointsTable(150000)
+    assert(files(big.copy(df = big.df.withColumn("pad", md5(col("name")))), cores) == cores)
+  }
+
   test("bboxFromStats reads FLOAT covering statistics") {
     val out = tmpDir("float_bbox")
     spark.range(100).toDF("id")

@@ -366,4 +366,128 @@ class GeomSpec extends AnyFunSuite {
     val poly = Wkb.write(Wkt.parse("POLYGON((0 0,1 0,1 1,0 0))"))
     assert(Wkb.typeName(poly.take(9)) == "POLYGON")
   }
+  // ---- Wkb.envelope: the Geom-free scan agrees with read(...).envelope ----
+
+  /** Random WKB writer covering what [[Wkb.read]] accepts: all seven
+    * types, either byte order per record, ISO Z/M/ZM codes and EWKB
+    * Z/M flags, an EWKB SRID, empties (no rings, no members, NaN
+    * points), NaN ordinates and nested collections.
+    */
+  private final class WkbGen(seed: Long) {
+    private val r = new scala.util.Random(seed)
+    private val out = new java.io.ByteArrayOutputStream()
+    private var order = java.nio.ByteOrder.LITTLE_ENDIAN
+    private def bytes(n: Int)(f: java.nio.ByteBuffer => Unit): Unit = {
+      val b = java.nio.ByteBuffer.allocate(n).order(order); f(b); out.write(b.array())
+    }
+    private def int(v: Int): Unit = bytes(4)(_.putInt(v))
+    private def dbl(v: Double): Unit = bytes(8)(_.putDouble(v))
+    private def ord(): Double = r.nextInt(20) match {
+      case 0 => Double.NaN
+      case _ => (r.nextDouble() - 0.5) * math.pow(10, r.nextInt(7))
+    }
+
+    def geometry(): Array[Byte] = { out.reset(); record(r.nextInt(7) + 1, 0, top = true); out.toByteArray }
+
+    private def record(t: Int, depth: Int, top: Boolean): Unit = {
+      order = if (r.nextBoolean()) java.nio.ByteOrder.LITTLE_ENDIAN else java.nio.ByteOrder.BIG_ENDIAN
+      out.write(if (order == java.nio.ByteOrder.LITTLE_ENDIAN) 1 else 0)
+      val (code, extra) = r.nextInt(6) match {
+        case 0 => (t, 0)
+        case 1 => (t + 1000, 1) // ISO Z
+        case 2 => (t + 2000, 1) // ISO M
+        case 3 => (t + 3000, 2) // ISO ZM
+        case 4 => (t | 0x80000000, 1) // EWKB Z
+        case _ => (t | 0x80000000 | 0x40000000, 2) // EWKB ZM
+      }
+      val srid = top && r.nextInt(3) == 0
+      int(if (srid) code | 0x20000000 else code)
+      if (srid) int(4326)
+      def coord(x: Double, y: Double): Unit = { dbl(x); dbl(y); (0 until extra).foreach(_ => dbl(ord())) }
+      def points(n: Int): Unit = { int(n); (0 until n).foreach(_ => coord(ord(), ord())) }
+      def members(n: Int, mt: => Int): Unit = {
+        int(n); (0 until n).foreach(_ => record(mt, depth + 1, top = false))
+      }
+      val n = if (r.nextInt(6) == 0) 0 else r.nextInt(4) + 1
+      t match {
+        case 1 => if (r.nextInt(6) == 0) coord(Double.NaN, Double.NaN) else coord(ord(), ord())
+        case 2 => points(if (n == 0) 0 else n + 1)
+        case 3 => int(n); (0 until n).foreach(_ => points(r.nextInt(5)))
+        case 4 | 5 | 6 => members(n, t - 3)
+        case 7 => members(if (depth >= 3) 0 else n, r.nextInt(7) + 1)
+      }
+    }
+  }
+
+  private def scanEnvelope(b: Array[Byte]): (Double, Double, Double, Double) = {
+    val e = new Array[Double](4)
+    Wkb.envelope(b, e)
+    (e(0), e(1), e(2), e(3))
+  }
+
+  private def sameEnvelope(a: (Double, Double, Double, Double),
+      b: (Double, Double, Double, Double)): Boolean =
+    a.productIterator.zip(b.productIterator).forall { case (x: Double, y: Double) =>
+      (x.isNaN && y.isNaN) || x == y
+    }
+
+  private def outcome(b: Array[Byte]): Either[String, (Double, Double, Double, Double)] =
+    try Right(scanEnvelope(b)) catch { case e: IllegalArgumentException => Left(e.getClass.getName) }
+
+  private def reference(b: Array[Byte]): Either[String, (Double, Double, Double, Double)] =
+    try Right(Wkb.read(b).envelope) catch { case e: IllegalArgumentException => Left(e.getClass.getName) }
+
+  test("Wkb.envelope equals Wkb.read(...).envelope over generated WKB") {
+    val gen = new WkbGen(20261018L)
+    var empties = 0
+    (0 until 5000).foreach { i =>
+      val b = gen.geometry()
+      val want = Wkb.read(b).envelope
+      val got = scanEnvelope(b)
+      assert(sameEnvelope(got, want), s"case $i: scan $got != read $want")
+      if (want._1.isNaN) empties += 1
+    }
+    assert(empties > 100, s"generator made only $empties empty envelopes")
+    // the hand-built cases of the round-trip test
+    Seq[Geom](p(1.5, -2.25), unitSq, GeometryCollection(Array(p(9, 9), unitSq)),
+      Polygon(Array.empty), MultiPoint(Array(p(Double.NaN, Double.NaN), p(3, 4))))
+      .foreach(g => assert(sameEnvelope(scanEnvelope(Wkb.write(g)), g.envelope), g.toString))
+  }
+
+  test("Wkb.envelope fails exactly where Wkb.read fails: truncation, " +
+      "corruption, mistyped members, nesting") {
+    val gen = new WkbGen(7L)
+    val rnd = new scala.util.Random(11L)
+    (0 until 400).foreach { i =>
+      val b = gen.geometry()
+      (0 until b.length).foreach { n =>
+        val t = java.util.Arrays.copyOf(b, n)
+        assert(outcome(t).isLeft, s"case $i: truncation to $n of ${b.length} bytes must throw")
+        assert(reference(t).isLeft)
+      }
+      (0 until 20).foreach { _ =>
+        val c = b.clone()
+        c(rnd.nextInt(c.length)) = rnd.nextInt(256).toByte
+        (outcome(c), reference(c)) match {
+          case (Right(x), Right(y)) => assert(sameEnvelope(x, y), s"case $i corrupted")
+          case (x, y) => assert(x == y, s"case $i corrupted: scan $x, read $y")
+        }
+      }
+    }
+    // MULTIPOINT whose member is a LineString
+    val ls = Wkb.write(LineString(ring((0, 0), (1, 1))))
+    val mistyped = java.nio.ByteBuffer.allocate(9 + ls.length)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).put(1.toByte).putInt(4).putInt(1).put(ls).array()
+    assert(reference(mistyped).isLeft && outcome(mistyped).isLeft)
+    // GEOMETRYCOLLECTION nested one level past the bound, and at it
+    def nested(levels: Int): Array[Byte] = {
+      val leaf = Wkb.write(p(1, 2))
+      (0 until levels).foldLeft(leaf) { (inner, _) =>
+        java.nio.ByteBuffer.allocate(9 + inner.length).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+          .put(1.toByte).putInt(7).putInt(1).put(inner).array()
+      }
+    }
+    assert(reference(nested(65)).isLeft && outcome(nested(65)).isLeft)
+    assert(outcome(nested(64)) == Right((1.0, 2.0, 1.0, 2.0)))
+  }
 }

@@ -40,6 +40,9 @@ class PartitionPruneSpec extends AnyFunSuite {
   test("cpu-time budget instrument is live: measures compute, not wall") {
     assert(cpuBean.isCurrentThreadCpuTimeSupported,
       "ThreadMXBean CPU time unsupported — budget assertions would be vacuous")
+    // disabled measurement reads -1 forever: the spin below would never end
+    assert(cpuBean.isThreadCpuTimeEnabled,
+      "ThreadMXBean CPU time disabled — the busy spin could not terminate")
     // negative pin: a deliberate ~100 ms busy spin MUST register as CPU,
     // so an artificially exponentialized covering (pure compute) cannot
     // hide from the budgets below the way it could from a quiet wall
